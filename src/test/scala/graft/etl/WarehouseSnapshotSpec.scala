@@ -3,6 +3,7 @@ package graft.etl
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import java.nio.file.{Files, LinkOption, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Snapshot-isolation pins for the warehouse's generation-pointer commit
@@ -14,6 +15,7 @@ import scala.jdk.CollectionConverters._
 class WarehouseSnapshotSpec extends SparkSpec {
 
   import spark.implicits._
+  import WarehouseSnapshotSpec._
 
   private val schema = StructType(Seq(
     StructField("study_id", StringType),
@@ -92,6 +94,7 @@ class WarehouseSnapshotSpec extends SparkSpec {
   test("a DataFrame planned before a flip keeps its snapshot; GC keeps two generations") {
     val wh = new Warehouse(spark, tmpDir("whgc").toString)
     wh.replace("t", batch("SA", 0), Seq("study_id"))
+    assert(ptrTarget(wh, "t") == "g000000001")
     val pinned = wh.read("t", schema)   // resolves the g1 directory
     wh.mergeReplacePartitions("t", schema, batch("SA", 1),
       (_, incoming) => incoming, Seq("study_id"))
@@ -104,11 +107,31 @@ class WarehouseSnapshotSpec extends SparkSpec {
       .iterator().asScala.map(_.getFileName.toString)
       .filter(_.startsWith("g")).toList.sorted
     assert(gens == List("g000000002", "g000000003")) // g1 GC'd, previous kept
+    assert(ptrTarget(wh, "t") == "g000000003")
     // appends flip generations too: the batch lands atomically
     wh.append("t", batch("SB", 9), Seq("study_id"))
     val counts = wh.read("t", schema).groupBy("study_id").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(counts == Map("SA" -> 200L, "SB" -> 200L))
+    assert(ptrTarget(wh, "t") == "g000000004")
+  }
+
+  test("a legacy regular-file pointer reads the same rows; the next commit " +
+      "converts it to a symlink") {
+    val wh = new Warehouse(spark, tmpDir("whlegacy").toString)
+    wh.replace("t", batch("SA", 0), Seq("study_id"))
+    wh.append("t", batch("SB", 0), Seq("study_id"))
+    val before = wh.read("t", schema).collect().toSet
+    legacyPtr(wh, "t", "g000000002")
+    assert(wh.read("t", schema).collect().toSet == before)
+    assert(wh.snapshot().read("t", schema).count() == 400L)
+
+    wh.mergeReplacePartitions("t", schema, batch("SA", 3),
+      (_, incoming) => incoming, Seq("study_id"))
+    assert(ptrTarget(wh, "t") == "g000000003")
+    val counts = wh.read("t", schema).groupBy("study_id", "v").count()
+      .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
+    assert(counts == Map(("SA", 3) -> 200L, ("SB", 0) -> 200L))
   }
 
   test("a second live writer fails fast; a crashed writer's lock auto-releases") {
@@ -144,5 +167,52 @@ class WarehouseSnapshotSpec extends SparkSpec {
     java.nio.file.Files.write(lock, "2147483646".getBytes("UTF-8"))
     wh.append("t", batch("SB", 9), Seq("study_id"))
     assert(wh.read("t", schema).filter(col("study_id") === "SB").count() == 200L)
+  }
+
+  test("the lock names exactly its last owner's pid, over a longer stale one") {
+    val wh = new Warehouse(spark, tmpDir("whlockpid").toString)
+    val lock = Paths.get(wh.root, "t", "_lock")
+    Files.createDirectories(lock.getParent)
+    // a longer pid string than this process's, left by an earlier owner
+    val stale = Long.MaxValue.toString
+    val pid = ProcessHandle.current().pid().toString
+    assert(stale.length > pid.length)
+    Files.write(lock, stale.getBytes("UTF-8"))
+    wh.replace("t", batch("SA", 0), Seq("study_id"))   // take + release
+
+    val foreign = java.nio.channels.FileChannel.open(lock,
+      java.nio.file.StandardOpenOption.WRITE)
+    val held = foreign.tryLock()
+    try {
+      val e = intercept[IllegalStateException] {
+        wh.append("t", batch("SB", 1), Seq("study_id"))
+      }
+      assert(e.getMessage.contains(s"live writer pid $pid ($lock)"),
+        e.getMessage)
+    } finally { held.release(); foreign.close() }
+    assert(wh.read("t", schema).count() == 200L)
+  }
+}
+
+object WarehouseSnapshotSpec {
+  import org.scalatest.Assertions._
+
+  /** What pointer `dir/_current` names (a table's generation, or the
+    * catalog's version for `_catalog`), asserting it is a symlink and that
+    * no `_current.tmp` is left beside it. */
+  def ptrTarget(wh: Warehouse, dir: String): String = {
+    val ptr = Paths.get(wh.root, dir, "_current")
+    assert(Files.isSymbolicLink(ptr), s"$ptr is not a symlink")
+    assert(!Files.exists(ptr.resolveSibling("_current.tmp"),
+      LinkOption.NOFOLLOW_LINKS))
+    Files.readSymbolicLink(ptr).toString
+  }
+
+  /** Rewrite pointer `dir/_current` as a regular file holding `name`, the
+    * way warehouses written before pointers were links hold it. */
+  def legacyPtr(wh: Warehouse, dir: String, name: String): Unit = {
+    val ptr = Paths.get(wh.root, dir, "_current")
+    Files.delete(ptr)
+    Files.write(ptr, s"$name\n".getBytes("UTF-8"))
   }
 }

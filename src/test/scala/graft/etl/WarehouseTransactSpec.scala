@@ -3,7 +3,7 @@ package graft.etl
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, LinkOption, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Pins for the warehouse's multi-table commit protocol: a
@@ -17,6 +17,7 @@ import scala.jdk.CollectionConverters._
 class WarehouseTransactSpec extends SparkSpec {
 
   import spark.implicits._
+  import WarehouseSnapshotSpec.{legacyPtr, ptrTarget}
 
   private val schema = StructType(Seq(
     StructField("id", IntegerType),
@@ -58,6 +59,11 @@ class WarehouseTransactSpec extends SparkSpec {
       assert(readV(wh, "b") == Set(0, 2))
     }
     assert(readV(wh, "a") == Set(2) && readV(wh, "b") == Set(0, 2))
+    // the catalog pointer and both table mirrors are symlinks naming the
+    // live version and generations
+    assert(ptrTarget(wh, "_catalog") == "v000000001")
+    assert(ptrTarget(wh, "a") == "g000000002")
+    assert(ptrTarget(wh, "b") == "g000000002")
 
     // after the abort and the commit, plain single-table writes still work
     // (locks were released) and keep the catalog entry current
@@ -106,6 +112,63 @@ class WarehouseTransactSpec extends SparkSpec {
       }
     } finally { done = true; reader.join(120000) }
     assert(violations.isEmpty, violations.asScala.mkString("; "))
+  }
+
+  test("legacy regular-file pointers read the same state; the next commit " +
+      "converts them; drop deletes the pointer and keeps pinned generations") {
+    val wh = new Warehouse(spark, tmpDir("whlegacy").toString, catalogRetention = 4)
+    wh.transact { wh.replace("a", batch(1)); wh.replace("b", batch(1)) } // v1
+    wh.transact { wh.replace("a", batch(2)) }                            // v2
+    Seq("a" -> "g000000002", "b" -> "g000000001", "_catalog" -> "v000000002")
+      .foreach { case (d, n) => legacyPtr(wh, d, n) }
+    assert(readV(wh, "a") == Set(2) && readV(wh, "b") == Set(1))
+    assert(wh.snapshot().read("a", schema).count() == 50L)
+    assert(wh.snapshotAt(1).read("a", schema).select("v").distinct()
+      .as[Int].collect().toSet == Set(1))
+
+    wh.transact { wh.replace("a", batch(3)); wh.append("b", batch(3)) } // v3
+    assert(readV(wh, "a") == Set(3) && readV(wh, "b") == Set(1, 3))
+    assert(ptrTarget(wh, "_catalog") == "v000000003")
+    assert(ptrTarget(wh, "a") == "g000000003")
+    assert(ptrTarget(wh, "b") == "g000000002")
+
+    // drop: the pointer goes, the live generation and every generation a
+    // retained version pins stay, and time travel still reads them
+    assert(wh.drop("a") && !wh.exists("a"))
+    val aRoot = Paths.get(wh.root, "a")
+    assert(!Files.exists(aRoot.resolve("_current"), LinkOption.NOFOLLOW_LINKS))
+    val gens = Files.list(aRoot).iterator().asScala
+      .map(_.getFileName.toString).filter(_.startsWith("g")).toList.sorted
+    assert(gens == List("g000000001", "g000000002", "g000000003"))
+    assert(ptrTarget(wh, "_catalog") == "v000000004")
+    assert(wh.snapshotAt(2).read("a", schema).select("v").distinct()
+      .as[Int].collect().toSet == Set(2))
+  }
+
+  test("a stale _current.tmp link of a writer killed before its rename " +
+      "changes nothing; the next commit replaces it") {
+    val wh = new Warehouse(spark, tmpDir("whstaletmp").toString)
+    wh.transact { wh.replace("a", batch(1)) }                            // v1
+    wh.replace("u", batch(1))                     // u resolves by its pointer
+    // each writer died between creating its link and renaming it
+    // over _current: the table's link names a generation it had written,
+    // the catalog's a version whose manifest it had written
+    Files.createDirectories(Paths.get(wh.root, "u", "g000000002"))
+    Files.write(Paths.get(wh.root, "_catalog", "v000000002"),
+      "#ts\t0\na\tg000000002\n".getBytes("UTF-8"))
+    Seq("u" -> "g000000002", "_catalog" -> "v000000002").foreach { case (d, n) =>
+      Files.createSymbolicLink(Paths.get(wh.root, d, "_current.tmp"), Paths.get(n))
+    }
+    assert(readV(wh, "a") == Set(1) && readV(wh, "u") == Set(1))
+    assert(wh.snapshot().read("a", schema).count() == 50L)
+    assert(ptrTarget(wh, "a") == "g000000001")
+
+    wh.replace("u", batch(2))
+    wh.transact { wh.replace("a", batch(2)) }
+    assert(readV(wh, "a") == Set(2) && readV(wh, "u") == Set(2))
+    assert(ptrTarget(wh, "u") == "g000000003") // numbered past the stale dir
+    assert(ptrTarget(wh, "_catalog") == "v000000002")
+    assert(ptrTarget(wh, "a") == "g000000002")
   }
 
   test("nested transactions are refused; a live foreign lock aborts the block cleanly") {
